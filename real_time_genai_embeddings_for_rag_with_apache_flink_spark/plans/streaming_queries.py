@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import glob as _glob
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -438,6 +439,86 @@ def state_partitions(spark: SparkSession, n: int):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def _drain(
+    df: DataFrame,
+    name: str,
+    sink,
+    checkpoint: str | None = None,
+    n_state_partitions: int | None = None,
+    adaptive: bool = True,
+    until=None,
+) -> None:
+    """The one streaming-query lifecycle behind every catalog runner:
+    start ``sink(df.writeStream)`` on ``checkpoint`` (a fresh tempdir,
+    removed afterwards, when None), run it to completion and record its
+    non-empty micro-batch count in LAST_RUN_BATCHES[name].
+
+    Completion is Trigger.AvailableNow unless ``until`` is given: then
+    the query runs on the default trigger, ``until()`` blocks until the
+    caller has what it needs, and the query is stopped — for sources
+    whose offsets advance per call and so never report exhaustion to
+    availableNow (see run_until_rows).
+
+    ``n_state_partitions`` sizes spark.sql.shuffle.partitions for the
+    run (see state_partitions); ``adaptive=False`` turns AQE off for it.
+    Both confs are read by the query's session clone at start, and both
+    are restored on every exit path, a failed batch included — the
+    error then surfaces from awaitTermination."""
+    spark = df.sparkSession
+    tmp = None
+    if checkpoint is None:
+        tmp = tempfile.mkdtemp(prefix="ssq_ckpt_")
+        checkpoint = os.path.join(tmp, name)
+    confs = {}
+    if n_state_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(n_state_partitions)
+    if not adaptive:
+        confs["spark.sql.adaptive.enabled"] = "false"
+    prior = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        writer = sink(df.writeStream).option("checkpointLocation", checkpoint)
+        if until is None:
+            q = writer.trigger(availableNow=True).start()
+        else:
+            q = writer.start()
+            until()
+            q.stop()
+        q.awaitTermination()
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+        if tmp is not None:
+            shutil.rmtree(tmp, ignore_errors=True)
+    LAST_RUN_BATCHES[name] = sum(
+        1 for p in q.recentProgress if p["numInputRows"] > 0
+    )
+
+
+def run_foreach_batch(
+    df: DataFrame,
+    process,
+    name: str,
+    checkpoint: str | None = None,
+    adaptive: bool = True,
+) -> None:
+    """Drain a streaming DataFrame to completion (availableNow) through
+    ``foreachBatch(process)`` — the one runner for every catalog row
+    whose per-batch work is a bounded-DataFrame program. Pass a stable
+    ``checkpoint`` for restartable state (a re-run then resumes). State
+    partitions come from the caller's session (the stateful rows run
+    inside state_partitions); see _drain for the lifecycle and the AQE
+    contract."""
+    _drain(
+        df,
+        name,
+        lambda w: w.foreachBatch(process),
+        checkpoint,
+        adaptive=adaptive,
+    )
+
+
 def run_to_memory(
     df: DataFrame,
     name: str,
@@ -457,22 +538,14 @@ def run_to_memory(
     State partitioning never changes results — only task counts."""
     if n_state_partitions is None:
         n_state_partitions = default_state_partitions(df.sparkSession)
-    sink = f"{name}_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="ssq_ckpt_"), sink)
-    with state_partitions(df.sparkSession, n_state_partitions):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    LAST_RUN_BATCHES[name] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
+    table = f"{name}_{uuid.uuid4().hex[:8]}"
+    _drain(
+        df,
+        name,
+        lambda w: w.format("memory").queryName(table).outputMode(output_mode),
+        n_state_partitions=n_state_partitions,
     )
-    return df.sparkSession.table(sink)
+    return df.sparkSession.table(table)
 
 
 @query(
@@ -1120,38 +1193,19 @@ def run_incremental_dedup(
         append_fps(surv.select("fp"), batch_id)
         surv.unpersist()
 
-    # AQE re-plans every stage of every micro-batch — pure fixed
-    # latency here, where the per-batch shuffles are already sized by
-    # the state_partitions contract and each batch is delta-sized (the
-    # r10 quiet profile: AQE off cut st14 ~25% with identical results).
-    # Deployments feeding corpus-sized batches can keep AQE with
-    # spark.graft.batchAqe=true; the prior session value is restored
-    # either way.
-    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    keep_aqe = (
-        (spark.conf.get("spark.graft.batchAqe", "false") or "false").lower()
-        == "true"
-    )
-    if not keep_aqe:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        q = (
-            arrivals.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        # AQE off: it re-plans every stage of every micro-batch — pure
+        # fixed latency here, where the per-batch shuffles are already
+        # sized by the state_partitions contract and each batch is
+        # delta-sized (the r10 quiet profile: AQE off cut st14 ~25%
+        # with identical results)
+        run_foreach_batch(arrivals, process, run_name, ckpt, adaptive=False)
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
         if fp_state_mode == "parquet":
             # release the run's warm state cache on EVERY exit path —
             # a failed stream in a long-lived catalog/bench session
             # must not leave corpus-sized persisted blocks pinned
             _drop_cache()
-    LAST_RUN_BATCHES[run_name] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
     return (
         spark.read.schema("doc_id long, n_corpus_candidates long")
         .option("recursiveFileLookup", "true")
@@ -1472,18 +1526,7 @@ def st15_stream_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
             "append"
         ).partitionBy("cell").parquet(index_dir)
 
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="ssq_ckpt_"), "st15")
-    q = (
-        stream_embeddings(spark, sf_dir)
-        .writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES["st15"] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
+    run_foreach_batch(stream_embeddings(spark, sf_dir), append_batch, "st15")
     # Compaction: one file per cell partition replaces per-batch shards.
     (
         spark.read.parquet(index_dir)
@@ -1622,14 +1665,7 @@ def st10_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         latest.write.mode("overwrite").parquet(path)
         versions.append(path)
 
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="ssq_ckpt_"), "st10")
-    q = (
-        ev.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(ev, upsert, "st10")
     final = spark.read.parquet(versions[-1])
     return final.select("user_id", "event_id", "event_type", "value")
 
@@ -1644,28 +1680,24 @@ def run_until_rows(
     therefore never report exhaustion to Trigger.AvailableNow."""
     import time as _time
 
-    sink = f"{name}_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="ssq_ckpt_"), sink)
-    q = (
-        df.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
     spark = df.sparkSession
-    deadline = _time.monotonic() + timeout_s
-    while (
-        _time.monotonic() < deadline
-        and spark.table(sink).count() < target_rows
-    ):
-        _time.sleep(0.25)
-    q.stop()
-    q.awaitTermination()
-    LAST_RUN_BATCHES[name] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
+    table = f"{name}_{uuid.uuid4().hex[:8]}"
+
+    def landed() -> None:
+        deadline = _time.monotonic() + timeout_s
+        while (
+            _time.monotonic() < deadline
+            and spark.table(table).count() < target_rows
+        ):
+            _time.sleep(0.25)
+
+    _drain(
+        df,
+        name,
+        lambda w: w.format("memory").queryName(table).outputMode(output_mode),
+        until=landed,
     )
-    return spark.table(sink)
+    return spark.table(table)
 
 
 @query(
@@ -1841,7 +1873,6 @@ def st18_stream_knn_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.batch import load_table
 
     import atexit
-    import shutil
 
     static = load_table(spark, sf_dir, "embeddings")
     corpus = static.filter(F.col("vec_id") % 50 != 0)
@@ -1860,20 +1891,7 @@ def st18_stream_knn_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(results_dir, f"b{batch_id:05d}")
         )
 
-    ckpt_base = tempfile.mkdtemp(prefix="ssq_ckpt_")
-    atexit.register(shutil.rmtree, ckpt_base, ignore_errors=True)
-    ckpt = os.path.join(ckpt_base, "st18")
-    q = (
-        stream_embeddings(spark, sf_dir)
-        .writeStream.foreachBatch(serve_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES["st18"] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
+    run_foreach_batch(stream_embeddings(spark, sf_dir), serve_batch, "st18")
     return spark.read.option("recursiveFileLookup", "true").parquet(
         results_dir
     )
@@ -2050,16 +2068,7 @@ def run_quota_sampling(
         counts.commit(new_counts, batch_id)
         accepted.unpersist()
 
-    stream = (
-        arrivals.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    stream.awaitTermination()
-    LAST_RUN_BATCHES["st20"] = sum(
-        1 for p in stream.recentProgress if p["numInputRows"] > 0
-    )
+    run_foreach_batch(arrivals, process, "st20", ckpt)
     return (
         spark.read.schema("doc_id long, source string")
         .option("recursiveFileLookup", "true")
@@ -2218,16 +2227,7 @@ def run_rolling_zscore(
         )
         state.commit(new_buffer, batch_id)
 
-    q = (
-        arrivals.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES[run_name] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
+    run_foreach_batch(arrivals, process, run_name, ckpt)
     return (
         spark.read.schema(
             "event_id long, event_type string, value double, zscore double"
@@ -2334,16 +2334,7 @@ def run_cdc_apply(
         merged = compact(state.read(state_schema).unionByName(delta))
         state.commit(merged, batch_id)
 
-    q = (
-        arrivals.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES[run_name] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
+    run_foreach_batch(arrivals, process, run_name, ckpt)
     return state.read(state_schema).filter(
         F.col("state_type") != F.lit("error")
     )
@@ -2459,16 +2450,7 @@ def run_stream_ivm(
         new_view = merge_view(prev_view, view_delta_changes(prev_state, delta))
         state.commit_tables({"state": new_state, "view": new_view}, batch_id)
 
-    q = (
-        arrivals.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES[run_name] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
+    run_foreach_batch(arrivals, process, run_name, ckpt)
     return state.read_table("view", view_schema).select(
         "state_type",
         "n_users",
@@ -2618,16 +2600,7 @@ def run_stream_compaction(
         )
         state.commit_tables({"cum": new_cum, "bins": new_bins}, batch_id)
 
-    q = (
-        arrivals.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES[run_name] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
+    run_foreach_batch(arrivals, process, run_name, ckpt)
     return state.read_table("bins", bins_schema)
 
 
@@ -2730,41 +2703,12 @@ def run_maxsim_serving(
     mkdirs(spark, results_dir)
     state_schema = "q_id long, tok_id long, q_vec array<float>"
 
-    # opt-in per-phase wall-clock attribution (the st28 pattern, r11
-    # verdict #5): with spark.graft.profileSt25=true each trigger
-    # prints buffer-read / readiness / score+write / commit timings to
-    # stderr. The extra count() actions CHANGE the measured total (each
-    # phase materializes eagerly instead of fusing into the downstream
-    # job), so profile numbers attribute cost shares — never compare
-    # them to the frozen baseline directly.
-    profile = (
-        spark.conf.get("spark.graft.profileSt25", "false").lower() == "true"
-    )
-
-    def _phase(label: str, batch_id: int, t0: float) -> float:
-        import sys as _sys
-        import time as _time
-
-        t1 = _time.perf_counter()
-        if profile:
-            print(
-                f"# st25-profile b{batch_id} {label}: {t1 - t0:.3f}s",
-                file=_sys.stderr,
-            )
-        return t1
-
     def process(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
-
         if state.applied(batch_id):
             return
-        t = _time.perf_counter()
         toks = state.read(state_schema).unionByName(
             batch.select("q_id", "tok_id", "q_vec")
         )
-        if profile:
-            toks.count()
-            t = _phase("buffer-read", batch_id, t)
         ready = (
             toks.groupBy("q_id")
             .agg(F.count(F.lit(1)).alias("n_toks"))
@@ -2772,9 +2716,6 @@ def run_maxsim_serving(
             .select("q_id")
         )
         ready_toks = toks.join(F.broadcast(ready), "q_id")
-        if profile:
-            ready_toks.count()
-            t = _phase("readiness", batch_id, t)
         w = Window.partitionBy("q_id").orderBy(
             F.col("maxsim_scaled").desc(), "doc_label"
         )
@@ -2785,22 +2726,9 @@ def run_maxsim_serving(
             .write.mode("overwrite")
             .parquet(f"{results_dir}/b{batch_id}")
         )
-        if profile:
-            t = _phase("score+write", batch_id, t)
         state.commit(toks.join(F.broadcast(ready), "q_id", "left_anti"), batch_id)
-        if profile:
-            _phase("commit", batch_id, t)
 
-    q = (
-        arrivals.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES[run_name] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
+    run_foreach_batch(arrivals, process, run_name, ckpt)
     LAST_RESULT_DIRS[run_name] = results_dir
     return (
         spark.read.schema("q_id long, doc_label int, maxsim_scaled long, rnk int")
@@ -2980,16 +2908,7 @@ def run_stream_transitions(
             {"last": new_last, "counts": new_counts}, batch_id
         )
 
-    q = (
-        arrivals.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES[run_name] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
+    run_foreach_batch(arrivals, process, run_name, ckpt)
     counts = state.read_table("counts", counts_schema)
     wnorm = Window.partitionBy("prev_type")
     return counts.select(
@@ -3113,16 +3032,7 @@ def run_stream_quality_gate(
         )
         state.commit(folded, batch_id)
 
-    q = (
-        arrivals.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES[run_name] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
+    run_foreach_batch(arrivals, process, run_name, ckpt)
     return state.read(schema).withColumn(
         "violation_rate",
         F.round(
@@ -3226,38 +3136,12 @@ def run_stream_dup_components(
     reps_schema = "band_idx int, band_key string, rep long"
     labels_schema = "doc_id long, component long"
 
-    # opt-in per-phase wall-clock attribution (r10 verdict #7): with
-    # spark.graft.profileSt28=true each trigger prints banding / state
-    # read / merge-graph / commit timings to stderr. The extra count()
-    # actions CHANGE the measured total (each phase materializes
-    # eagerly instead of fusing into the downstream job), so profile
-    # numbers attribute cost shares — never compare them to the frozen
-    # baseline directly.
-    profile = (
-        spark.conf.get("spark.graft.profileSt28", "false").lower() == "true"
-    )
-
-    def _phase(label: str, batch_id: int, t0: float) -> float:
-        import sys as _sys
-        import time as _time
-
-        t1 = _time.perf_counter()
-        if profile:
-            print(
-                f"# st28-profile b{batch_id} {label}: {t1 - t0:.3f}s",
-                file=_sys.stderr,
-            )
-        return t1
-
     def process(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
-
         from ..sources.batch import spread_compute
         from .llmops import _lsh_bands_df, signatures_from_docs
 
         if state.applied(batch_id):
             return
-        t = _time.perf_counter()
         # a file-stream micro-batch arrives as ONE scan split, so the
         # shingle+md5 explode below signatures_from_docs would run on
         # one core (guide §2.5 input skew — the same spread_compute
@@ -3268,14 +3152,7 @@ def run_stream_dup_components(
                 spread_compute(batch.select("doc_id", "text"), "doc_id")
             )
         ).persist()
-        if profile:
-            bands_b.count()
-            t = _phase("band-batch", batch_id, t)
         old_reps = state.read_table("reps", reps_schema)
-        if profile:
-            old_reps.count()
-            state.read_table("labels", labels_schema).count()
-            t = _phase("state-read", batch_id, t)
         cand = bands_b.groupBy("band_idx", "band_key").agg(
             F.min("doc_id").alias("cand")
         )
@@ -3350,8 +3227,6 @@ def run_stream_dup_components(
             .persist()
         )
         rows = ce.limit(_ST28_DRIVER_CAP + 1).collect()
-        if profile:
-            t = _phase("merge-graph-collect", batch_id, t)
         if not rows:
             # quiet batch: carry both tables forward unchanged
             state.commit_tables({"reps": new_reps, "labels": prev}, batch_id)
@@ -3432,23 +3307,12 @@ def run_stream_dup_components(
                 {"reps": new_reps, "labels": untouched.unionByName(relabeled)},
                 batch_id,
             )
-        if profile:
-            _phase("resolve-and-commit", batch_id, t)
         ce.unpersist()
         merged.unpersist()
         prev.unpersist()
         bands_b.unpersist()
 
-    q = (
-        arrivals.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES[run_name] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
+    run_foreach_batch(arrivals, process, run_name, ckpt)
     return state.read_table("labels", labels_schema)
 
 
@@ -3627,20 +3491,15 @@ def st30_kinesis_protocol_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     retention contract). Against real AWS the same reader signs with
     SigV4; the double GetRecords fetch (plan + read) and the EFO
     alternative are documented in the module docstring."""
-    from ..sources.docgen import wire_record
     from ..sources.kinesis_fake import FakeKinesisServer
     from ..sources.kinesis_lite import register as register_kinesis
 
     register_kinesis(spark)
-    shards: dict[str, list[tuple[str, bytes]]] = {
-        f"shardId-{i:012d}": [] for i in range(_ST30_SHARDS)
-    }
-    for doc_id in range(_ST30_DOCS):
-        _, wire = wire_record(42, doc_id)
-        shards[f"shardId-{doc_id % _ST30_SHARDS:012d}"].append(
-            (str(doc_id), wire.encode())
-        )
-    srv = FakeKinesisServer("docs", shards, reveal_per_list=_ST30_REVEAL)
+    srv = FakeKinesisServer(
+        "docs",
+        _wire_shards(range(_ST30_DOCS), _ST30_SHARDS),
+        reveal_per_list=_ST30_REVEAL,
+    )
     endpoint = srv.start()
     try:
         raw = (
@@ -3668,16 +3527,21 @@ def st30_kinesis_protocol_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ST31_DOCS = 600
-_ST31_DIM = 32
+# ---------------------------------------------------------------------------
+# The wire topology: st31 and st33-st37 run the reference job through
+# run_pipeline against the in-process protocol endpoints, one seam each
+# (sink protocol, full topology, retries, torn bulks, restart, reshard),
+# all certified by ONE arithmetic oracle over ONE generated corpus.
+# ---------------------------------------------------------------------------
 
+_WIRE_DOCS = 600
+_WIRE_SHARDS = 4
+_WIRE_DIM = 32
 
-@query(
-    "st31_opensearch_protocol_sink",
-    oracle=f"""
+_WIRE_ORACLE = f"""
 WITH gen AS (
   SELECT i AS doc_id, 'synthetic text ' || md5('42:' || i) AS text
-  FROM (SELECT UNNEST(generate_series(0, {_ST31_DOCS - 1})) AS i)
+  FROM (SELECT UNNEST(generate_series(0, {_WIRE_DOCS - 1})) AS i)
 ),
 toks AS (
   SELECT doc_id,
@@ -3693,7 +3557,166 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM gen) AS n_docs,
        (SELECT MIN(text) FROM gen) AS min_text,
        (SELECT MAX(text) FROM gen) AS max_text
 FROM toks
-""",
+"""
+
+
+def _wire(doc_id: int) -> tuple[str, bytes]:
+    """(PartitionKey, data) of the generated wire record ``doc_id``."""
+    from ..sources.docgen import wire_record
+
+    return str(doc_id), wire_record(42, doc_id)[1].encode()
+
+
+def _wire_shards(
+    doc_ids, n_shards: int | None = None
+) -> dict[str, list[tuple[str, bytes]]]:
+    """Wire records of ``doc_ids`` routed to shard doc_id % n_shards
+    (default _WIRE_SHARDS) — the producer Lambda's PartitionKey
+    routing."""
+    n = n_shards or _WIRE_SHARDS
+    shards: dict[str, list[tuple[str, bytes]]] = {
+        f"shardId-{i:012d}": [] for i in range(n)
+    }
+    for doc_id in doc_ids:
+        shards[f"shardId-{doc_id % n:012d}"].append(_wire(doc_id))
+    return shards
+
+
+def _wire_topology(
+    spark: SparkSession,
+    shards: dict[str, list[tuple[str, bytes]]] | None = None,
+    *,
+    json_source: bool = False,
+    kinesis: dict | None = None,
+    opensearch: dict | None = None,
+    extra: dict | None = None,
+    prepare=None,
+    restart=None,
+) -> DataFrame:
+    """Run the reference job wire to wire and certify what it indexed.
+
+    Starts the in-process Kinesis endpoint serving ``shards`` (default:
+    the whole _WIRE_DOCS corpus over _WIRE_SHARDS shards) and the
+    OpenSearch endpoint — ``kinesis`` / ``opensearch`` are their fault
+    knobs — and stops both on every exit path. Runs ``run_pipeline``
+    (kinesis-lite from earliest -> Md5Bow embed -> REST ``_bulk``;
+    ``extra`` adds PipelineConfig.extra options) to completion, checks
+    that the D1 bootstrap created the reference's hnsw mapping, reads
+    the index back with paginated ``search_all`` and returns
+    _st33_certify's aggregate.
+
+    What differs per row comes in through hooks, each called as
+    ``hook(ksrv, kurl, osrv)``: ``prepare`` runs once both endpoints
+    are up, before the first run; ``restart`` runs while the job is
+    down, and the job then restarts from the SAME checkpoint.
+    ``json_source`` replaces Kinesis with a JSON file stream of the
+    same corpus (st31)."""
+    from ..config import PipelineConfig
+    from ..operators.embed import Md5BowEmbedder
+    from ..sources.docgen import wire_record
+    from ..sources.kinesis_fake import FakeKinesisServer
+    from ..streaming.opensearch_fake import FakeOpenSearchServer
+    from ..streaming.opensearch_http import HttpOpenSearchClient
+    from ..streaming.pipeline import run_pipeline
+
+    osrv = FakeOpenSearchServer(**(opensearch or {}))
+    ksrv = kurl = None
+    try:
+        ourl = osrv.start()
+        extra = dict(
+            extra or {}, transport="http", hosts=[ourl], index="embeddings"
+        )
+        if json_source:
+            src_dir = tempfile.mkdtemp(prefix="wire_src_")
+            with open(os.path.join(src_dir, "docs.jsonl"), "w") as fh:
+                for doc_id in range(_WIRE_DOCS):
+                    fh.write(wire_record(42, doc_id)[1] + "\n")
+            source = {"source_format": "json", "source_path": src_dir}
+        else:
+            ksrv = FakeKinesisServer(
+                "docs",
+                _wire_shards(range(_WIRE_DOCS)) if shards is None else shards,
+                **(kinesis or {}),
+            )
+            kurl = ksrv.start()
+            source = {
+                "source_format": "kinesis-lite",
+                "start_position": "earliest",
+            }
+            extra.update(
+                kinesis_stream="docs",
+                kinesis_region="us-east-1",
+                kinesis_endpoint=kurl,
+            )
+        cfg = PipelineConfig(
+            **source,
+            sink_format="opensearch",
+            embedding_dim=_WIRE_DIM,
+            on_error="fail",
+            checkpoint_dir=tempfile.mkdtemp(prefix="wire_ckpt_"),
+            extra=extra,
+        )
+
+        def drain() -> None:
+            run_pipeline(
+                spark, cfg, embedder_factory=Md5BowEmbedder
+            ).awaitTermination()
+
+        if prepare is not None:
+            prepare(ksrv, kurl, osrv)
+        drain()
+        if restart is not None:
+            restart(ksrv, kurl, osrv)
+            drain()
+        # D1 really ran: the index carries the reference's hnsw mapping,
+        # not an auto-created mapping-less one
+        method = osrv.indices["embeddings"]["mappings"]["properties"][
+            "passage_embedding"
+        ]["method"]
+        assert method["name"] == "hnsw", method
+        assert method["parameters"] == {"ef_construction": 128, "m": 24}
+        # paginated read-back (search_after, one bounded page per
+        # request): the certification step scales past a single
+        # response page; text is unique per doc, so it is a valid
+        # resume key. page_size < n_docs so pagination really runs.
+        hits = list(
+            HttpOpenSearchClient(ourl).search_all(
+                "embeddings", "text.raw", page_size=250
+            )
+        )
+    finally:
+        osrv.stop()
+        if ksrv is not None:
+            ksrv.stop()
+    return _st33_certify(spark, hits)
+
+
+def _st33_certify(spark: SparkSession, hits: list[dict]) -> DataFrame:
+    """Shared certification aggregate for the wire-topology rows (st31,
+    st33-st37): doc counts, the exact integer sum of every indexed
+    embedding coordinate, text extrema."""
+    indexed = spark.createDataFrame(
+        [
+            (h["text"], [int(x) for x in (h["passage_embedding"] or [])])
+            for h in hits
+        ],
+        "text string, emb array<long>",
+    )
+    coord_sum = F.aggregate(
+        F.col("emb"), F.lit(0).cast("long"), lambda acc, x: acc + x
+    )
+    return indexed.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.countDistinct("text").alias("n_indexed"),
+        F.sum(coord_sum).alias("sum_coords"),
+        F.min("text").alias("min_text"),
+        F.max("text").alias("max_text"),
+    )
+
+
+@query(
+    "st31_opensearch_protocol_sink",
+    oracle=_WIRE_ORACLE,
     tags=("streaming", "sink", "opensearch", "pipeline"),
 )
 def st31_opensearch_protocol_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3722,71 +3745,7 @@ def st31_opensearch_protocol_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale shape: identical to the production sink — the batch never
     funnels through the driver (one bulk stream per partition); the
     read-back is the CERTIFICATION step, sized by what was indexed."""
-    import os
-
-    from ..config import PipelineConfig
-    from ..operators.embed import Md5BowEmbedder
-    from ..sources.docgen import wire_record
-    from ..streaming.opensearch_fake import FakeOpenSearchServer
-    from ..streaming.opensearch_http import HttpOpenSearchClient
-    from ..streaming.pipeline import run_pipeline
-
-    src_dir = tempfile.mkdtemp(prefix="st31_src_")
-    with open(os.path.join(src_dir, "docs.jsonl"), "w") as fh:
-        for i in range(_ST31_DOCS):
-            fh.write(wire_record(42, i)[1] + "\n")
-
-    srv = FakeOpenSearchServer()
-    endpoint = srv.start()
-    try:
-        cfg = PipelineConfig(
-            source_format="json",
-            source_path=src_dir,
-            sink_format="opensearch",
-            embedding_dim=_ST31_DIM,
-            on_error="fail",
-            checkpoint_dir=tempfile.mkdtemp(prefix="st31_ckpt_"),
-            extra={
-                "transport": "http",
-                "hosts": [endpoint],
-                "index": "embeddings",
-            },
-        )
-        q = run_pipeline(spark, cfg, embedder_factory=Md5BowEmbedder)
-        q.awaitTermination()
-        # D1 really ran: the index carries the reference's hnsw mapping,
-        # not an auto-created mapping-less one
-        method = srv.indices["embeddings"]["mappings"]["properties"][
-            "passage_embedding"
-        ]["method"]
-        assert method["name"] == "hnsw", method
-        assert method["parameters"] == {"ef_construction": 128, "m": 24}
-        client = HttpOpenSearchClient(endpoint)
-        # paginated read-back (search_after, one bounded page per
-        # request): the certification step scales past a single
-        # response page; text is unique per doc, so it is a valid
-        # resume key. page_size < n_docs so pagination really runs.
-        hits = list(client.search_all("embeddings", "text.raw", page_size=250))
-    finally:
-        srv.stop()
-
-    indexed = spark.createDataFrame(
-        [
-            (h["text"], [int(x) for x in (h["passage_embedding"] or [])])
-            for h in hits
-        ],
-        "text string, emb array<long>",
-    )
-    coord_sum = F.aggregate(
-        F.col("emb"), F.lit(0).cast("long"), lambda acc, x: acc + x
-    )
-    return indexed.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("text").alias("n_indexed"),
-        F.sum(coord_sum).alias("sum_coords"),
-        F.min("text").alias("min_text"),
-        F.max("text").alias("max_text"),
-    )
+    return _wire_topology(spark, json_source=True)
 
 
 _ST32_DOCS = 600
@@ -3887,33 +3846,9 @@ def st32_kinesis_producer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_ST33_DOCS = 600
-_ST33_SHARDS = 4
-_ST33_DIM = 32
-
-
 @query(
     "st33_reference_topology_wire_to_wire",
-    oracle=f"""
-WITH gen AS (
-  SELECT i AS doc_id, 'synthetic text ' || md5('42:' || i) AS text
-  FROM (SELECT UNNEST(generate_series(0, {_ST33_DOCS - 1})) AS i)
-),
-toks AS (
-  SELECT doc_id,
-    CAST(('0x' || substr(md5('m06:' || tok), 1, 8)) AS BIGINT) AS h
-  FROM (
-    SELECT doc_id, unnest(regexp_split_to_array(text, '[ \\t\\n\\f\\r]+')) AS tok
-    FROM gen
-  ) WHERE tok != ''
-)
-SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM gen) AS n_docs,
-       CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_indexed,
-       CAST(SUM(1 + (h // 256) % 7) AS BIGINT) AS sum_coords,
-       (SELECT MIN(text) FROM gen) AS min_text,
-       (SELECT MAX(text) FROM gen) AS max_text
-FROM toks
-""",
+    oracle=_WIRE_ORACLE,
     tags=("streaming", "source", "sink", "kinesis", "opensearch", "pipeline"),
 )
 def st33_reference_topology_wire_to_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3942,112 +3877,12 @@ def st33_reference_topology_wire_to_wire(spark: SparkSession, sf_dir: str) -> Da
     stream per output partition, nothing corpus-sized through the
     driver; availableNow drains the fully-visible backlog exactly as
     a batch replay of the production stream would."""
-    from ..config import PipelineConfig
-    from ..operators.embed import Md5BowEmbedder
-    from ..sources.docgen import wire_record
-    from ..sources.kinesis_fake import FakeKinesisServer
-    from ..streaming.opensearch_fake import FakeOpenSearchServer
-    from ..streaming.opensearch_http import HttpOpenSearchClient
-    from ..streaming.pipeline import run_pipeline
-
-    shards: dict[str, list[tuple[str, bytes]]] = {
-        f"shardId-{i:012d}": [] for i in range(_ST33_SHARDS)
-    }
-    for doc_id in range(_ST33_DOCS):
-        _, wire = wire_record(42, doc_id)
-        shards[f"shardId-{doc_id % _ST33_SHARDS:012d}"].append(
-            (str(doc_id), wire.encode())
-        )
-    ksrv = FakeKinesisServer("docs", shards)
-    kurl = ksrv.start()
-    osrv = FakeOpenSearchServer()
-    ourl = osrv.start()
-    try:
-        cfg = PipelineConfig(
-            source_format="kinesis-lite",
-            sink_format="opensearch",
-            embedding_dim=_ST33_DIM,
-            on_error="fail",
-            start_position="earliest",
-            checkpoint_dir=tempfile.mkdtemp(prefix="st33_ckpt_"),
-            extra={
-                "kinesis_stream": "docs",
-                "kinesis_region": "us-east-1",
-                "kinesis_endpoint": kurl,
-                "transport": "http",
-                "hosts": [ourl],
-                "index": "embeddings",
-            },
-        )
-        q = run_pipeline(spark, cfg, embedder_factory=Md5BowEmbedder)
-        q.awaitTermination()
-        method = osrv.indices["embeddings"]["mappings"]["properties"][
-            "passage_embedding"
-        ]["method"]
-        assert method["name"] == "hnsw", method
-        assert method["parameters"] == {"ef_construction": 128, "m": 24}
-        client = HttpOpenSearchClient(ourl)
-        # paginated read-back — see st31; the one-shot GET /_search a
-        # driver-sized fixture permits would cap at the service's
-        # single-page size limit on a real domain
-        hits = list(client.search_all("embeddings", "text.raw", page_size=250))
-    finally:
-        ksrv.stop()
-        osrv.stop()
-
-    return _st33_certify(spark, hits)
-
-
-def _st33_certify(spark: SparkSession, hits: list[dict]) -> DataFrame:
-    """Shared certification aggregate for the wire-topology rows (st33
-    and its fault-injected twin st34): doc counts, the exact integer
-    sum of every indexed embedding coordinate, text extrema."""
-    indexed = spark.createDataFrame(
-        [
-            (h["text"], [int(x) for x in (h["passage_embedding"] or [])])
-            for h in hits
-        ],
-        "text string, emb array<long>",
-    )
-    coord_sum = F.aggregate(
-        F.col("emb"), F.lit(0).cast("long"), lambda acc, x: acc + x
-    )
-    return indexed.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("text").alias("n_indexed"),
-        F.sum(coord_sum).alias("sum_coords"),
-        F.min("text").alias("min_text"),
-        F.max("text").alias("max_text"),
-    )
-
-
-_ST34_DOCS = 600
-_ST34_SHARDS = 4
-_ST34_DIM = 32
+    return _wire_topology(spark)
 
 
 @query(
     "st34_wire_topology_fault_injected",
-    oracle=f"""
-WITH gen AS (
-  SELECT i AS doc_id, 'synthetic text ' || md5('42:' || i) AS text
-  FROM (SELECT UNNEST(generate_series(0, {_ST34_DOCS - 1})) AS i)
-),
-toks AS (
-  SELECT doc_id,
-    CAST(('0x' || substr(md5('m06:' || tok), 1, 8)) AS BIGINT) AS h
-  FROM (
-    SELECT doc_id, unnest(regexp_split_to_array(text, '[ \\t\\n\\f\\r]+')) AS tok
-    FROM gen
-  ) WHERE tok != ''
-)
-SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM gen) AS n_docs,
-       CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_indexed,
-       CAST(SUM(1 + (h // 256) % 7) AS BIGINT) AS sum_coords,
-       (SELECT MIN(text) FROM gen) AS min_text,
-       (SELECT MAX(text) FROM gen) AS max_text
-FROM toks
-""",
+    oracle=_WIRE_ORACLE,
     tags=("streaming", "source", "sink", "kinesis", "opensearch", "pipeline"),
 )
 def st34_wire_topology_fault_injected(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4080,29 +3915,14 @@ def st34_wire_topology_fault_injected(spark: SparkSession, sf_dir: str) -> DataF
 
     Scale shape: identical to st33 — the injected faults change only
     the retry schedule, never what crosses the driver."""
-    from ..config import PipelineConfig
-    from ..operators.embed import Md5BowEmbedder
     from ..sources.docgen import register as register_docgen
-    from ..sources.kinesis_fake import FakeKinesisServer
     from ..sources.kinesis_lite import put_records_writer
-    from ..streaming.opensearch_fake import FakeOpenSearchServer
-    from ..streaming.opensearch_http import HttpOpenSearchClient
-    from ..streaming.pipeline import run_pipeline
 
-    register_docgen(spark)
-    ksrv = FakeKinesisServer(
-        "docs",
-        {f"shardId-{i:012d}": [] for i in range(_ST34_SHARDS)},
-        put_fail_every=7,
-        get_throttle_every=3,
-    )
-    kurl = ksrv.start()
-    osrv = FakeOpenSearchServer(throttle_every=2)
-    ourl = osrv.start()
-    try:
-        corpus = (
+    def produce(ksrv, kurl, osrv) -> None:
+        register_docgen(spark)
+        (
             spark.read.format("docgen")
-            .option("rows", str(_ST34_DOCS))
+            .option("rows", str(_WIRE_DOCS))
             .option("partitions", "4")
             .option("seed", "42")
             .load()
@@ -4110,81 +3930,36 @@ def st34_wire_topology_fault_injected(spark: SparkSession, sf_dir: str) -> DataF
                 F.col("doc_id").cast("string").alias("partition_key"),
                 F.col("value").alias("data"),
             )
-        )
-        corpus.foreachPartition(
-            put_records_writer(
-                {
-                    "stream_name": "docs",
-                    "endpoint_url": kurl,
-                    # keep the injected-failure resubmit pauses short —
-                    # the schedule, not the wall-clock, is under test
-                    "throttle_backoff_sec": "0.01",
-                }
+            .foreachPartition(
+                put_records_writer(
+                    {
+                        "stream_name": "docs",
+                        "endpoint_url": kurl,
+                        # keep the injected-failure resubmit pauses
+                        # short — the schedule, not the wall-clock, is
+                        # under test
+                        "throttle_backoff_sec": "0.01",
+                    }
+                )
             )
         )
         # burst at the bootstrap seam: the next two requests (HEAD
         # existence probe, PUT index DDL) each eat a 429 first
         osrv.throttle_next = 2
-        cfg = PipelineConfig(
-            source_format="kinesis-lite",
-            sink_format="opensearch",
-            embedding_dim=_ST34_DIM,
-            on_error="fail",
-            start_position="earliest",
-            checkpoint_dir=tempfile.mkdtemp(prefix="st34_ckpt_"),
-            extra={
-                "kinesis_stream": "docs",
-                "kinesis_region": "us-east-1",
-                "kinesis_endpoint": kurl,
-                "kinesis_throttle_backoff_sec": "0.01",
-                "transport": "http",
-                "hosts": [ourl],
-                "index": "embeddings",
-            },
-        )
-        q = run_pipeline(spark, cfg, embedder_factory=Md5BowEmbedder)
-        q.awaitTermination()
-        method = osrv.indices["embeddings"]["mappings"]["properties"][
-            "passage_embedding"
-        ]["method"]
-        assert method["name"] == "hnsw", method
-        assert method["parameters"] == {"ef_construction": 128, "m": 24}
-        client = HttpOpenSearchClient(ourl)
-        hits = list(client.search_all("embeddings", "text.raw", page_size=250))
-    finally:
-        ksrv.stop()
-        osrv.stop()
 
-    return _st33_certify(spark, hits)
-
-
-_ST35_DOCS = 600
-_ST35_SHARDS = 4
-_ST35_DIM = 32
+    return _wire_topology(
+        spark,
+        _wire_shards([]),
+        kinesis={"put_fail_every": 7, "get_throttle_every": 3},
+        opensearch={"throttle_every": 2},
+        extra={"kinesis_throttle_backoff_sec": "0.01"},
+        prepare=produce,
+    )
 
 
 @query(
     "st35_idempotent_sink_torn_bulk",
-    oracle=f"""
-WITH gen AS (
-  SELECT i AS doc_id, 'synthetic text ' || md5('42:' || i) AS text
-  FROM (SELECT UNNEST(generate_series(0, {_ST35_DOCS - 1})) AS i)
-),
-toks AS (
-  SELECT doc_id,
-    CAST(('0x' || substr(md5('m06:' || tok), 1, 8)) AS BIGINT) AS h
-  FROM (
-    SELECT doc_id, unnest(regexp_split_to_array(text, '[ \\t\\n\\f\\r]+')) AS tok
-    FROM gen
-  ) WHERE tok != ''
-)
-SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM gen) AS n_docs,
-       CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_indexed,
-       CAST(SUM(1 + (h // 256) % 7) AS BIGINT) AS sum_coords,
-       (SELECT MIN(text) FROM gen) AS min_text,
-       (SELECT MAX(text) FROM gen) AS max_text
-FROM toks
-""",
+    oracle=_WIRE_ORACLE,
     tags=("streaming", "source", "sink", "kinesis", "opensearch", "pipeline"),
 )
 def st35_idempotent_sink_torn_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4212,87 +3987,16 @@ def st35_idempotent_sink_torn_bulk(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale shape: identical to st33 — ids add one string column to the
     sink projection; nothing else changes."""
-    from ..config import PipelineConfig
-    from ..operators.embed import Md5BowEmbedder
-    from ..sources.docgen import wire_record
-    from ..sources.kinesis_fake import FakeKinesisServer
-    from ..streaming.opensearch_fake import FakeOpenSearchServer
-    from ..streaming.opensearch_http import HttpOpenSearchClient
-    from ..streaming.pipeline import run_pipeline
-
-    shards: dict[str, list[tuple[str, bytes]]] = {
-        f"shardId-{i:012d}": [] for i in range(_ST35_SHARDS)
-    }
-    for doc_id in range(_ST35_DOCS):
-        _, wire = wire_record(42, doc_id)
-        shards[f"shardId-{doc_id % _ST35_SHARDS:012d}"].append(
-            (str(doc_id), wire.encode())
-        )
-    ksrv = FakeKinesisServer("docs", shards)
-    kurl = ksrv.start()
-    osrv = FakeOpenSearchServer(partial_every=2)
-    ourl = osrv.start()
-    try:
-        cfg = PipelineConfig(
-            source_format="kinesis-lite",
-            sink_format="opensearch",
-            embedding_dim=_ST35_DIM,
-            on_error="fail",
-            start_position="earliest",
-            checkpoint_dir=tempfile.mkdtemp(prefix="st35_ckpt_"),
-            extra={
-                "kinesis_stream": "docs",
-                "kinesis_region": "us-east-1",
-                "kinesis_endpoint": kurl,
-                "transport": "http",
-                "hosts": [ourl],
-                "index": "embeddings",
-                "id_strategy": "deterministic",
-                "index_by_id": True,
-            },
-        )
-        q = run_pipeline(spark, cfg, embedder_factory=Md5BowEmbedder)
-        q.awaitTermination()
-        method = osrv.indices["embeddings"]["mappings"]["properties"][
-            "passage_embedding"
-        ]["method"]
-        assert method["name"] == "hnsw", method
-        client = HttpOpenSearchClient(ourl)
-        hits = list(client.search_all("embeddings", "text.raw", page_size=250))
-    finally:
-        ksrv.stop()
-        osrv.stop()
-
-    return _st33_certify(spark, hits)
-
-
-_ST36_DOCS = 600
-_ST36_SHARDS = 4
-_ST36_DIM = 32
+    return _wire_topology(
+        spark,
+        opensearch={"partial_every": 2},
+        extra={"id_strategy": "deterministic", "index_by_id": True},
+    )
 
 
 @query(
     "st36_restart_exactly_once_wire",
-    oracle=f"""
-WITH gen AS (
-  SELECT i AS doc_id, 'synthetic text ' || md5('42:' || i) AS text
-  FROM (SELECT UNNEST(generate_series(0, {_ST36_DOCS - 1})) AS i)
-),
-toks AS (
-  SELECT doc_id,
-    CAST(('0x' || substr(md5('m06:' || tok), 1, 8)) AS BIGINT) AS h
-  FROM (
-    SELECT doc_id, unnest(regexp_split_to_array(text, '[ \\t\\n\\f\\r]+')) AS tok
-    FROM gen
-  ) WHERE tok != ''
-)
-SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM gen) AS n_docs,
-       CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_indexed,
-       CAST(SUM(1 + (h // 256) % 7) AS BIGINT) AS sum_coords,
-       (SELECT MIN(text) FROM gen) AS min_text,
-       (SELECT MAX(text) FROM gen) AS max_text
-FROM toks
-""",
+    oracle=_WIRE_ORACLE,
     tags=("streaming", "source", "sink", "kinesis", "opensearch", "pipeline"),
 )
 def st36_restart_exactly_once_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4319,97 +4023,22 @@ def st36_restart_exactly_once_wire(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale shape: st33's — the restart adds one offset-log read and one
     unpaced tip walk per shard, nothing corpus-sized."""
-    from ..config import PipelineConfig
-    from ..operators.embed import Md5BowEmbedder
-    from ..sources.docgen import wire_record
-    from ..sources.kinesis_fake import FakeKinesisServer
-    from ..streaming.opensearch_fake import FakeOpenSearchServer
-    from ..streaming.opensearch_http import HttpOpenSearchClient
-    from ..streaming.pipeline import run_pipeline
+    half = _WIRE_DOCS // 2
 
-    half = _ST36_DOCS // 2
-    shards: dict[str, list[tuple[str, bytes]]] = {
-        f"shardId-{i:012d}": [] for i in range(_ST36_SHARDS)
-    }
-    for doc_id in range(half):
-        _, wire = wire_record(42, doc_id)
-        shards[f"shardId-{doc_id % _ST36_SHARDS:012d}"].append(
-            (str(doc_id), wire.encode())
-        )
-    ksrv = FakeKinesisServer("docs", shards)
-    kurl = ksrv.start()
-    osrv = FakeOpenSearchServer()
-    ourl = osrv.start()
-    ckpt = tempfile.mkdtemp(prefix="st36_ckpt_")
-    try:
-        cfg = PipelineConfig(
-            source_format="kinesis-lite",
-            sink_format="opensearch",
-            embedding_dim=_ST36_DIM,
-            on_error="fail",
-            start_position="earliest",
-            checkpoint_dir=ckpt,
-            extra={
-                "kinesis_stream": "docs",
-                "kinesis_region": "us-east-1",
-                "kinesis_endpoint": kurl,
-                "transport": "http",
-                "hosts": [ourl],
-                "index": "embeddings",
-            },
-        )
-        # run 1: drain the visible half, then the query terminates
-        run_pipeline(spark, cfg, embedder_factory=Md5BowEmbedder).awaitTermination()
+    def grow(ksrv, kurl, osrv) -> None:
+        # run 1 drained the visible half, then the query terminated
         n_after_first = sum(len(v) for v in osrv.docs.values())
         assert n_after_first == half, n_after_first
         # the producer keeps writing while the job is down
-        for doc_id in range(half, _ST36_DOCS):
-            _, wire = wire_record(42, doc_id)
-            ksrv.append(
-                f"shardId-{doc_id % _ST36_SHARDS:012d}",
-                [(str(doc_id), wire.encode())],
-            )
-        # run 2: restart from the SAME checkpoint — only new records
-        run_pipeline(spark, cfg, embedder_factory=Md5BowEmbedder).awaitTermination()
-        method = osrv.indices["embeddings"]["mappings"]["properties"][
-            "passage_embedding"
-        ]["method"]
-        assert method["name"] == "hnsw", method
-        client = HttpOpenSearchClient(ourl)
-        hits = list(client.search_all("embeddings", "text.raw", page_size=250))
-    finally:
-        ksrv.stop()
-        osrv.stop()
+        for shard, recs in _wire_shards(range(half, _WIRE_DOCS)).items():
+            ksrv.append(shard, recs)
 
-    return _st33_certify(spark, hits)
-
-
-_ST37_DOCS = 600
-_ST37_DIM = 32
+    return _wire_topology(spark, _wire_shards(range(half)), restart=grow)
 
 
 @query(
     "st37_reshard_exactly_once_wire",
-    oracle=f"""
-WITH gen AS (
-  SELECT i AS doc_id, 'synthetic text ' || md5('42:' || i) AS text
-  FROM (SELECT UNNEST(generate_series(0, {_ST37_DOCS - 1})) AS i)
-),
-toks AS (
-  SELECT doc_id,
-    CAST(('0x' || substr(md5('m06:' || tok), 1, 8)) AS BIGINT) AS h
-  FROM (
-    SELECT doc_id, unnest(regexp_split_to_array(text, '[ \\t\\n\\f\\r]+')) AS tok
-    FROM gen
-  ) WHERE tok != ''
-)
-SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM gen) AS n_docs,
-       CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_indexed,
-       CAST(SUM(1 + (h // 256) % 7) AS BIGINT) AS sum_coords,
-       (SELECT MIN(text) FROM gen) AS min_text,
-       (SELECT MAX(text) FROM gen) AS max_text
-FROM toks
-""",
+    oracle=_WIRE_ORACLE,
     tags=("streaming", "source", "sink", "kinesis", "opensearch", "pipeline"),
 )
 def st37_reshard_exactly_once_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4447,61 +4076,21 @@ def st37_reshard_exactly_once_wire(spark: SparkSession, sf_dir: str) -> DataFram
     the closed shards then cost one empty GetRecords per trigger until
     retention ages them out (their disappearance is likewise pinned in
     tests/test_kinesis_lite.py)."""
-    from ..config import PipelineConfig
-    from ..operators.embed import Md5BowEmbedder
-    from ..sources.docgen import wire_record
-    from ..sources.kinesis_fake import FakeKinesisServer
-    from ..streaming.opensearch_fake import FakeOpenSearchServer
-    from ..streaming.opensearch_http import HttpOpenSearchClient
-    from ..streaming.pipeline import run_pipeline
 
-    def wire(doc_id: int) -> tuple[str, bytes]:
-        _, w = wire_record(42, doc_id)
-        return (str(doc_id), w.encode())
-
-    # phase A: docs 0-299 round-robin over three original shards
-    shards: dict[str, list[tuple[str, bytes]]] = {
-        f"shardId-{i:012d}": [] for i in range(3)
-    }
-    for doc_id in range(300):
-        shards[f"shardId-{doc_id % 3:012d}"].append(wire(doc_id))
-    ksrv = FakeKinesisServer("docs", shards)
-    kurl = ksrv.start()
-    osrv = FakeOpenSearchServer()
-    ourl = osrv.start()
-    ckpt = tempfile.mkdtemp(prefix="st37_ckpt_")
-    try:
-        cfg = PipelineConfig(
-            source_format="kinesis-lite",
-            sink_format="opensearch",
-            embedding_dim=_ST37_DIM,
-            on_error="fail",
-            start_position="earliest",
-            checkpoint_dir=ckpt,
-            extra={
-                "kinesis_stream": "docs",
-                "kinesis_region": "us-east-1",
-                "kinesis_endpoint": kurl,
-                "transport": "http",
-                "hosts": [ourl],
-                "index": "embeddings",
-            },
-        )
-        # run 1: drain the pre-reshard stream and commit its cursors
-        run_pipeline(spark, cfg, embedder_factory=Md5BowEmbedder).awaitTermination()
+    def reshard(ksrv, kurl, osrv) -> None:
+        # run 1 drained the pre-reshard stream and committed its cursors
         n_after_first = sum(len(v) for v in osrv.docs.values())
         assert n_after_first == 300, n_after_first
-
         # the producer lands docs 300-329 on shard 2 BEFORE the reshard
         # closes it: the unread remainder of a closed parent
-        ksrv.append("shardId-000000000002", [wire(d) for d in range(300, 330)])
+        ksrv.append("shardId-000000000002", [_wire(d) for d in range(300, 330)])
         # SplitShard: shard 2 closes, docs 330-449 alternate onto its
         # two children
         ksrv.split_shard(
             "shardId-000000000002",
             {
-                "shardId-000000000003": [wire(d) for d in range(330, 450, 2)],
-                "shardId-000000000004": [wire(d) for d in range(331, 450, 2)],
+                "shardId-000000000003": [_wire(d) for d in range(330, 450, 2)],
+                "shardId-000000000004": [_wire(d) for d in range(331, 450, 2)],
             },
         )
         # MergeShards: shards 0 and 1 close, docs 450-599 land on the
@@ -4510,22 +4099,12 @@ def st37_reshard_exactly_once_wire(spark: SparkSession, sf_dir: str) -> DataFram
             "shardId-000000000000",
             "shardId-000000000001",
             "shardId-000000000005",
-            [wire(d) for d in range(450, 600)],
+            [_wire(d) for d in range(450, 600)],
         )
 
-        # run 2: restart from the committed offsets over the new shard map
-        run_pipeline(spark, cfg, embedder_factory=Md5BowEmbedder).awaitTermination()
-        method = osrv.indices["embeddings"]["mappings"]["properties"][
-            "passage_embedding"
-        ]["method"]
-        assert method["name"] == "hnsw", method
-        client = HttpOpenSearchClient(ourl)
-        hits = list(client.search_all("embeddings", "text.raw", page_size=250))
-    finally:
-        ksrv.stop()
-        osrv.stop()
-
-    return _st33_certify(spark, hits)
+    # phase A: docs 0-299 round-robin over three original shards; run 2
+    # restarts from the committed offsets over the new shard map
+    return _wire_topology(spark, _wire_shards(range(300), 3), restart=reshard)
 
 
 def _st38_oracle() -> str:
@@ -4595,18 +4174,7 @@ def st38_stream_hamming_index_maintenance(
             .parquet(index_dir)
         )
 
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="ssq_ckpt_"), "st38")
-    q = (
-        stream_embeddings(spark, sf_dir)
-        .writeStream.foreachBatch(append_words)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES["st38"] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
+    run_foreach_batch(stream_embeddings(spark, sf_dir), append_words, "st38")
     # compaction: the per-batch shard files collapse into one rewrite
     (
         spark.read.parquet(index_dir)
@@ -4789,17 +4357,7 @@ def st39_stream_graph_index_maintenance(
             {"nodes": all_nodes.drop("settled"), "edges": kept}, batch_id
         )
 
-    q = (
-        stream_embeddings(spark, sf_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES["st39"] = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
+    run_foreach_batch(stream_embeddings(spark, sf_dir), process, "st39", ckpt)
 
     # ---- serving: s30's walk against the MAINTAINED graph -----------
     kept_edges = state.read_table("edges", edges_schema)

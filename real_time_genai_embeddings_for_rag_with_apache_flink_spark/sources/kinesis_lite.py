@@ -696,14 +696,6 @@ class KinesisLiteStreamReader(DataSourceStreamReader):
         if not targets:
             return {}
         workers = min(self.walk_threads, len(targets))
-        if workers == 1:
-            out: dict[str, str | None] = {}
-            try:
-                for s, (p, c) in targets.items():
-                    out[s] = self._walk_to_tip(s, p, c)
-            finally:
-                self._positions.update(out)
-            return out
         with concurrent.futures.ThreadPoolExecutor(workers) as pool:
             futs = {
                 s: pool.submit(self._walk_to_tip, s, p, c)

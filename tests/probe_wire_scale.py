@@ -56,8 +56,8 @@ def main() -> None:
         if name == "st33_reference_topology_wire_to_wire":
             tiers["100x (60000 docs / 16 shards)"] = (60000, 16)
         for label, (docs, shards) in tiers.items():
-            sq._ST32_DOCS = sq._ST33_DOCS = docs
-            sq._ST32_SHARDS = sq._ST33_SHARDS = shards
+            sq._ST32_DOCS = sq._WIRE_DOCS = docs
+            sq._ST32_SHARDS = sq._WIRE_SHARDS = shards
             run(name)  # warm
             times = [run(name) for _ in range(3)]
             print(
@@ -66,8 +66,8 @@ def main() -> None:
                 flush=True,
             )
     # restore (harmless in a one-off process; explicit for REPL use)
-    sq._ST32_DOCS = sq._ST33_DOCS = 600
-    sq._ST32_SHARDS = sq._ST33_SHARDS = 4
+    sq._ST32_DOCS = sq._WIRE_DOCS = 600
+    sq._ST32_SHARDS = sq._WIRE_SHARDS = 4
 
 
 if __name__ == "__main__":

@@ -168,6 +168,50 @@ def test_python_stream_source_runs_multiple_microbatches(spark):
     assert sq.LAST_RUN_BATCHES["st12"] >= 3
 
 
+def test_run_foreach_batch_surfaces_body_error_and_restores_confs(
+    spark, tmp_path
+):
+    """The drain helper's failure contract (st14's): a raising
+    foreachBatch body surfaces its error from run_foreach_batch, the
+    body ran with AQE off and the session's shuffle partitions, and
+    both session confs are back at their prior values afterwards."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.plans.streaming_queries import (
+        run_foreach_batch,
+    )
+
+    aqe, parts = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    seen = {}
+
+    def body(batch, batch_id):
+        seen.update(
+            aqe=batch.sparkSession.conf.get(aqe),
+            parts=batch.sparkSession.conf.get(parts),
+        )
+        raise RuntimeError("drain-helper-body-failure")
+
+    before = {k: spark.conf.get(k) for k in (aqe, parts)}
+    spark.conf.set(aqe, "true")
+    spark.conf.set(parts, "7")
+    try:
+        with pytest.raises(Exception, match="drain-helper-body-failure"):
+            run_foreach_batch(
+                stream,
+                body,
+                "fb_fail",
+                checkpoint=str(tmp_path / "ckpt"),
+                adaptive=False,
+            )
+        assert seen == {"aqe": "false", "parts": "7"}
+        assert spark.conf.get(aqe) == "true"
+        assert spark.conf.get(parts) == "7"
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
 def test_outer_interval_join_null_emission_frontier(spark, tmp_path):
     """Pins st13's emission rule: a left row's null-padded result emits
     only when err_ts < global watermark (STRICT — a row exactly AT the
